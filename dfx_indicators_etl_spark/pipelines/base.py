@@ -249,8 +249,7 @@ class Pipeline:
     """One-source ETL run (`_pipeline.py:22-121`).
 
     ``run`` = retrieve → transform (+M49 filter) → year-range cut →
-    versioned parquet load; returns the transformed frame like the
-    reference's ``__call__``.
+    versioned parquet load; returns the landed dataset.
     """
 
     retriever: BaseRetriever
@@ -295,7 +294,16 @@ class Pipeline:
         )
 
     def run(self, spark: SparkSession, **kwargs) -> DataFrame:
+        """Retrieve, transform and load; return the landed dataset.
+
+        The result is read back from the written parquet with the
+        canonical ``DATA_SCHEMA`` (no schema-inference job), so later
+        actions scan the landed files instead of replanning and
+        re-running the source lineage (``df_transformed`` keeps that
+        lazy frame). It is tied to its versioned path: a later
+        overwrite of the same version changes what it reads.
+        """
         self.retrieve(spark, **kwargs)
         self.transform()
-        self.load()
-        return self.df_transformed
+        path = self.load()
+        return spark.read.schema(validation.DATA_SCHEMA).parquet(path)

@@ -8,18 +8,26 @@ observation view reconstructs the loaded relation losslessly (the
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import Row
+import threading
+from pathlib import Path
+from urllib.parse import urlparse
 
-from dfx_indicators_etl_spark import validation
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import Row
+from pyspark.sql import functions as F
+
+from dfx_indicators_etl_spark import database, validation
 from dfx_indicators_etl_spark.pipelines import (
     PipelineSettings,
     get_pipeline,
     imf_datamapper_api,
     list_pipelines,
     run_all,
+    union_all,
     who_gho_api,
 )
+from dfx_indicators_etl_spark.sources import sinks
 
 CANON = [f.name for f in validation.DATA_SCHEMA.fields]
 
@@ -151,20 +159,29 @@ def _all_inputs(spark, tmp, country_mapping):
     }
 
 
+def _country_dim(country_mapping):
+    return country_mapping.select(
+        F.col("m49").cast("int").alias("id"),
+        F.substring("iso_alpha_3", 1, 2).alias("iso_2"),
+        F.col("iso_alpha_3").alias("iso_3"),
+        "name",
+    )
+
+
 def test_run_all_sweeps_every_source(spark, tmp_path, country_mapping):
     inputs = _all_inputs(spark, tmp_path, country_mapping)
     assert sorted(inputs) == list_pipelines()  # nothing skipped
 
-    root = str(tmp_path / "store")
+    root = tmp_path / "store"
     results = run_all(
         spark,
         inputs,
-        storage_root=root,
+        storage_root=str(root),
         country_mapping=country_mapping,
         countries=country_mapping,
         settings=PipelineSettings(year_min=2005, year_max=2030),
     )
-    assert sorted(results) == list_pipelines()
+    assert list(results) == list(inputs)  # inputs order
 
     import glob
 
@@ -178,25 +195,20 @@ def test_run_all_sweeps_every_source(spark, tmp_path, country_mapping):
         assert {r["provider"] for r in back.select("provider").collect()} == {
             name
         }
+        # Land once: the returned frame scans only its landed files.
+        files = [Path(urlparse(f).path) for f in df.inputFiles()]
+        assert files, name
+        assert all(f.is_relative_to(root) for f in files), (name, files)
+
+    # ... so the star still rebuilds from them once the raw files are gone.
+    for staged in ("wdi.csv", "sdgdb.csv", "ghdx.csv"):
+        (tmp_path / staged).unlink()
 
     # Star build over the union of every landed source: the series fact
     # joined back through its dims must reconstruct the union losslessly
     # (the 12-source analogue of ind_pipeline_e2e's oracle equality).
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    from dfx_indicators_etl_spark import database
-
-    union = reduce(
-        lambda a, b: a.unionByName(b), (df for df in results.values())
-    )
-    country = country_mapping.select(
-        F.col("m49").cast("int").alias("id"),
-        F.substring("iso_alpha_3", 1, 2).alias("iso_2"),
-        F.col("iso_alpha_3").alias("iso_3"),
-        "name",
-    )
+    union = union_all(list(results.values()))
+    country = _country_dim(country_mapping)
     star = database.build_star_schema(union, country)
     series, ind_d, dim_d = star["series"], star["indicator"], star["dimension"]
     recon = (
@@ -234,6 +246,81 @@ def test_run_all_sweeps_every_source(spark, tmp_path, country_mapping):
     assert recon.count() == expected.count()
     assert recon.exceptAll(expected).count() == 0
     assert expected.exceptAll(recon).count() == 0
+
+
+# Jobs that run_all + the star build + its four writes launch over the
+# 12-source fixture. A refresh returning the lazy transformed frames, so
+# that the star build replans every source lineage, launches 91.
+MAX_REFRESH_JOBS = 79
+
+
+def test_run_all_jobs_stay_in_callers_group(spark, tmp_path, country_mapping):
+    """Pool workers inherit the caller's job group (so cancelJobGroup
+    stops a refresh), the refresh stays within its job budget, and the
+    M49 frame is computed once for all sources."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # Counts every evaluation of a mapping row: one pass over the three
+    # rows when run_all materializes the mapping once.
+    mapping_rows = sc.accumulator(0)
+
+    def tick(name):
+        mapping_rows.add(1)
+        return name
+
+    mapping = country_mapping.withColumn(
+        "name", F.udf(tick, "string")("name")
+    )
+    inputs = _all_inputs(spark, tmp_path, country_mapping)
+    group = "run-all-refresh"
+    sc.setJobGroup(group, "12-source refresh")
+    try:
+        results = run_all(
+            spark,
+            inputs,
+            storage_root=str(tmp_path / "store"),
+            country_mapping=mapping,
+            countries=mapping,
+        )
+        star = database.build_star_schema(
+            union_all(list(results.values())), _country_dim(country_mapping)
+        )
+        for name, df in star.items():
+            sinks.write_dataset(df, str(tmp_path / "star"), name, version="v1")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    # Job ids are sequential and run_all's first job (the checkpoint) is
+    # in the group, so any later ungrouped job came from a pool thread.
+    assert not [j for j in tracker.getJobIdsForGroup(None) if j > min(jobs)]
+    assert len(jobs) <= MAX_REFRESH_JOBS, len(jobs)
+    assert mapping_rows.value == country_mapping.count()
+
+
+def test_run_all_failure_names_source(spark, tmp_path, country_mapping):
+    """A failing source is re-raised with its name; queued sources are
+    dropped, in-flight ones finish, and no pool thread outlives run_all."""
+    inputs = _all_inputs(spark, tmp_path, country_mapping)
+    inputs["world_bank_wdi"] = {"path": str(tmp_path / "missing.csv")}
+    root = tmp_path / "store"
+    with pytest.raises(AnalysisException) as info:
+        run_all(
+            spark,
+            inputs,
+            storage_root=str(root),
+            country_mapping=country_mapping,
+            countries=country_mapping,
+        )
+    assert any("world_bank_wdi" in note for note in info.value.__notes__)
+    assert not [t for t in threading.enumerate() if t.name.startswith("run_all")]
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    for landed in root.glob("v*/*.parquet"):
+        assert (landed / "_SUCCESS").exists(), landed
+    assert not list(root.glob("v*/world_bank_wdi.parquet"))
 
 
 def test_get_pipeline_unknown_name_raises():
